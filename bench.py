@@ -259,23 +259,8 @@ def _merge_tick_floor_cache(per_size: dict[int, dict]) -> dict:
     return cache
 
 
-def _rest_totals(spark) -> dict:
-    """Completed-stage executor task-time totals from the UI REST API
-    (present only when the session was built with the UI enabled)."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/stages?status=complete") as r:
-            st = json.load(r)
-        return {"run_ms": sum(s.get("executorRunTime", 0) for s in st)}
-    except Exception:
-        return {"run_ms": 0}
-
-
 def run_pipeline(spark, docs_parquet: str, n_docs: int, corpus=None,
-                 task_time: bool = False, ckpt_root: str | None = None) -> dict:
+                 ckpt_root: str | None = None) -> dict:
     from deduplicator_go_spark.config import DedupConfig
     from deduplicator_go_spark.plans.pipeline import DedupPipeline
     from deduplicator_go_spark.sources.catalog import CheckpointCatalog
@@ -289,18 +274,6 @@ def run_pipeline(spark, docs_parquet: str, n_docs: int, corpus=None,
     try:
         cfg = DedupConfig()
         pipe = DedupPipeline(spark, CheckpointCatalog(root), cfg, with_substr=True)
-        stage_run_ms: dict[str, int] = {}
-        if task_time:
-            def wrap(orig):
-                def instrumented(name, build, *a, **kw):
-                    before = _rest_totals(spark)["run_ms"]
-                    r = orig(name, build, *a, **kw)
-                    stage_run_ms[name] = _rest_totals(spark)["run_ms"] - before
-                    return r
-                return instrumented
-
-            pipe._stage = wrap(pipe._stage)
-            pipe._incremental_stage = wrap(pipe._incremental_stage)
         report = pipe.run(docs)
         out = {
             "n_docs": report.docs_in,
@@ -308,8 +281,6 @@ def run_pipeline(spark, docs_parquet: str, n_docs: int, corpus=None,
             "docs_per_sec": round(report.docs_per_sec(), 1),
             "stages": {s.name: s.wall_ms for s in report.stages},
         }
-        if task_time:
-            out["stage_run_ms"] = stage_run_ms
         if corpus is not None:
             from deduplicator_go_spark.metrics import pair_recall
 
@@ -611,15 +582,13 @@ def main() -> None:
                     ("hi", hi_cores, hi_runs, hi_task),
                     ("lo", lo_cores, lo_runs, lo_task),
                 ]
-                for level, cores, mins, tmins in (levels if i % 2 == 0 else levels[::-1]):
+                for level, cores, mins, _ in (levels if i % 2 == 0 else levels[::-1]):
                     s = _fresh_spark(cores, ui=True)
-                    r = run_pipeline(s, sc_parquet, N_SCALING, None, task_time=True)
+                    r = run_pipeline(s, sc_parquet, N_SCALING, None)
                     s.stop()
                     rw[level] = sum(r["stages"].values()) / 1000.0
                     for k, v in r["stages"].items():
                         mins[k] = min(mins.get(k, 1 << 60), v)
-                    for k, v in r.get("stage_run_ms", {}).items():
-                        tmins[k] = min(tmins.get(k, 1 << 60), v)
                 round_walls.append(rw)
             def _metrics(lo_f, hi_f, lo_t, hi_t):
                 """Efficiency + adjusted decomposition from per-stage

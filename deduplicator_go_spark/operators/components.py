@@ -31,6 +31,8 @@ import threading
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pins import pin
+
 # serializes the shuffle-partition set/restore across concurrent
 # pipelines sharing one SparkSession (see connected_components)
 _CC_CONF_LOCK = threading.RLock()
@@ -114,7 +116,7 @@ def connected_components(edges: DataFrame, max_iters: int = 20) -> DataFrame:
     cur = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
     # lazy checkpoint + fingerprint: the init is ONE job, same fusion
     # as the round loop below
-    cur = cur.localCheckpoint(eager=False)
+    cur = pin(cur, eager=False)
     n0, _ = _fingerprint(cur)
     global_parts = int(sess.conf.get("spark.sql.shuffle.partitions"))
     global_aqe = sess.conf.get("spark.sql.adaptive.enabled")
@@ -139,7 +141,7 @@ def connected_components(edges: DataFrame, max_iters: int = 20) -> DataFrame:
                 # lazy checkpoint: the fingerprint action below
                 # materializes it, so each round is ONE job
                 # (checkpoint+converge fused)
-                cur = cur.localCheckpoint(eager=False)
+                cur = pin(cur, eager=False)
                 fp = _fingerprint(cur)
                 if fp == prev_fp:
                     break

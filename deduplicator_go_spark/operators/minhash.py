@@ -187,7 +187,8 @@ _SEG_ELEMS = 262_144
 _CONCAT_SEG = 2_097_152
 
 
-def _batch_minhash(texts: pd.Series, k: int, a: np.ndarray, b: np.ndarray) -> pd.Series:
+def _batch_minhash(texts, k: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(len(texts), num_perm) int64 signatures (uint64 bit patterns)."""
     num_perm = len(a)
     per_doc = [np.unique(w) for w in batch_window_hashes(texts, k, clamp_short=True)]
     lens = np.array([len(x) for x in per_doc], dtype=np.int64)
@@ -216,8 +217,7 @@ def _batch_minhash(texts: pd.Series, k: int, a: np.ndarray, b: np.ndarray) -> pd
                 np.add(buf, b[p], out=buf)          # mod 2^64 wraparound
                 out[rows[d0:d1], p] = np.minimum.reduceat(buf, sub_off)
             d0 = d1
-    sigs = out.view(np.int64)  # store as Spark bigint
-    return pd.Series(list(sigs))
+    return out.view(np.int64)  # store as Spark bigint
 
 
 def cpu_partitions(df: DataFrame, factor: int = 1) -> int:
@@ -247,12 +247,127 @@ def minhash_signatures(
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def mh(texts: pd.Series) -> pd.Series:
-        return _batch_minhash(texts, shingle_size, a, b)
+        return pd.Series(list(_batch_minhash(texts, shingle_size, a, b)))
 
     src = docs.select("url", F.col(text_col).alias("__t"))
     if repartition:
         src = src.repartition(cpu_partitions(docs))
     return src.select("url", mh(F.col("__t")).alias("sig"))
+
+
+# Spark's XXH64 (catalyst ``XXH64.hashLong`` / ``hashInt``), vectorised
+# over uint64 arrays. ``xxhash64(c1, ..., cn)`` starts from seed 42 and
+# feeds each column's hash in as the next column's seed.
+_XXH_SEED = 42
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = h ^ (h >> np.uint64(33))
+    h = h * _P2
+    h = h ^ (h >> np.uint64(29))
+    h = h * _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def _xxhash64_long(x: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    """Spark's xxhash64 of bigint values ``x`` under uint64 ``seed``
+    (arrays, broadcast against each other) → uint64."""
+    h = seed + _P5 + np.uint64(8)
+    h = h ^ (_rotl(x.view(np.uint64) * _P2, 31) * _P1)
+    return _fmix(_rotl(h, 27) * _P1 + _P4)
+
+
+def _xxhash64_int(x: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    """Spark's xxhash64 of int values ``x`` (given as uint64 holding the
+    32-bit pattern) under uint64 ``seed`` → uint64."""
+    h = seed + _P5 + np.uint64(4)
+    h = h ^ ((x & np.uint64(0xFFFFFFFF)) * _P1)
+    return _fmix(_rotl(h, 23) * _P2 + _P3)
+
+
+def band_hashes(sig: np.ndarray, bands: int, rows: int) -> np.ndarray:
+    """(n, bands) int64: per row, ``lsh.band_hash_array`` of the (n,
+    bands*rows) int64 signature matrix — xxhash64 over the band's rows
+    components, then the int band id."""
+    u = sig.view(np.uint64).reshape(len(sig), bands, rows)
+    h = np.full((len(sig), bands), _XXH_SEED, dtype=np.uint64)
+    for i in range(rows):
+        h = _xxhash64_long(u[:, :, i], h)
+    return _xxhash64_int(np.arange(bands, dtype=np.uint64), h).view(np.int64)
+
+
+def packed_lanes16(sig: np.ndarray) -> np.ndarray:
+    """(n, num_perm/4) int64: per row, ``packed_sig16`` of the (n,
+    num_perm) int64 signature matrix."""
+    seed = np.full(sig.shape, _XXH_SEED, dtype=np.uint64)
+    lanes = (_xxhash64_long(sig, seed) & np.uint64(0xFFFF)).reshape(len(sig), -1, 4)
+    packed = (
+        (lanes[:, :, 0] << np.uint64(48)) | (lanes[:, :, 1] << np.uint64(32))
+        | (lanes[:, :, 2] << np.uint64(16)) | lanes[:, :, 3]
+    )
+    return packed.view(np.int64)
+
+
+def _list_array(m: np.ndarray):
+    """Arrow list<int64> column whose rows are the rows of matrix ``m``."""
+    import pyarrow as pa
+
+    n, w = m.shape
+    offsets = pa.array(np.arange(0, n * w + 1, w, dtype=np.int32))
+    return pa.ListArray.from_arrays(offsets, pa.array(np.ascontiguousarray(m).ravel()))
+
+
+def minhash_table(
+    docs: DataFrame,
+    shingle_size: int = 5,
+    num_perm: int = 128,
+    seed: int = 42,
+    bands: int = 32,
+    rows: int = 4,
+) -> DataFrame:
+    """url, sig, bands, sig16 from one Python pass per Arrow batch.
+
+    ``sig`` equals ``minhash_signatures``; ``bands`` equals
+    ``lsh.band_hash_array(bands, rows)`` and ``sig16`` equals
+    ``packed_sig16(num_perm)`` over it, computed with the numpy port of
+    Spark's xxhash64 in the same pass. The JVM forms are 64 array
+    expressions of over a thousand column calls, built on the driver
+    and compiled cold on every run; here they are a few vector ops on
+    the signature matrix the kernel already holds.
+    """
+    import pyarrow as pa
+
+    a, b = _perm_coeffs(num_perm, seed)
+    # element nullability as the JVM-built columns had, so the files
+    # this appends match those earlier code wrote into the same table
+    schema = T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("sig", T.ArrayType(T.LongType())),
+        T.StructField("bands", T.ArrayType(T.LongType(), False)),
+        T.StructField("sig16", T.ArrayType(T.LongType(), False)),
+    ])
+
+    def mh(batches):
+        for batch in batches:
+            sig = _batch_minhash(batch.column(1).to_pylist(), shingle_size, a, b)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), _list_array(sig),
+                 _list_array(band_hashes(sig, bands, rows)),
+                 _list_array(packed_lanes16(sig))],
+                names=schema.fieldNames(),
+            )
+
+    src = docs.select("url", "text")
+    return src.repartition(cpu_partitions(docs)).mapInArrow(mh, schema)
 
 
 def estimated_jaccard(sig_a, sig_b, num_perm: int):

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..pins import pin
 from .minhash import shingle_hashes
 
 
@@ -48,7 +49,7 @@ def attach_texts(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     # The pinned size is ∝ distinct pair endpoints (never the corpus),
     # and localCheckpoint spills MEMORY_AND_DISK, so one materialized
     # endpoint-text table is strictly less IO than the second scan.
-    texts = texts.localCheckpoint(eager=True)
+    texts = pin(texts)
     return (
         pairs.join(texts.withColumnsRenamed({"url": "url_a", "text": "text_a"}), "url_a")
         .join(texts.withColumnsRenamed({"url": "url_b", "text": "text_b"}), "url_b")
@@ -173,19 +174,18 @@ def verify_pairs(
         # over the full standing signature table per call (per tick, on
         # the pipeline). Un-pruned (from-scratch) the parquet scan is
         # its own pin — no checkpoint barrier needed.
-        s = s.localCheckpoint(eager=True)
+        s = pin(s)
     # Both the clear and borderline branches consume this estimate
     # table; without pinning it, the union plan re-runs the two sig
     # joins (the whole signature table shuffled twice more) per branch.
     # Post-estimate rows are tiny (urls + origin + double), so
     # materializing once is far cheaper than one re-derivation.
     est_fn = estimated_jaccard_packed if packed else estimated_jaccard
-    with_sigs = (
+    with_sigs = pin(
         pairs.join(s.withColumnsRenamed({"url": "url_a", "sig": "sig_a"}), "url_a")
         .join(s.withColumnsRenamed({"url": "url_b", "sig": "sig_b"}), "url_b")
         .withColumn("est", est_fn(F.col("sig_a"), F.col("sig_b"), num_perm))
         .drop("sig_a", "sig_b")
-        .localCheckpoint(eager=True)
     )
     clear = with_sigs.filter(
         (F.col("est") >= threshold + est_margin) | (F.col("est") < threshold - est_margin)

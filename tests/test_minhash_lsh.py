@@ -262,3 +262,48 @@ def test_pipeline_schema_version_gates_catalog_reuse(spark, tmp_path, monkeypatc
     monkeypatch.setattr(P, "TABLE_SCHEMA_VERSION", P.TABLE_SCHEMA_VERSION + 1)
     p3 = P.DedupPipeline(spark, CheckpointCatalog(str(tmp_path / "ck")), c)
     assert p3.ph != p1.ph  # schema bump → incremental_begin wipes
+
+
+def test_numpy_xxhash64_matches_jvm_helpers(spark):
+    """The fused signature pass computes bands and sig16 with a numpy
+    port of Spark's xxhash64; the JVM column helpers stay the reference.
+    Signatures hold the edge values 0, ±1, Long.MIN_VALUE and
+    Long.MAX_VALUE at every component position, plus random values."""
+    from deduplicator_go_spark.operators.lsh import band_hash_array
+    from deduplicator_go_spark.operators.minhash import (
+        band_hashes,
+        packed_lanes16,
+        packed_sig16,
+    )
+
+    edges = np.array([0, 1, -1, -(1 << 63), (1 << 63) - 1], dtype=np.int64)
+    rng = np.random.default_rng(11)
+    rows = [np.roll(np.resize(edges, C.num_perm), i) for i in range(len(edges))]
+    rows += list(rng.integers(-(1 << 63), (1 << 63) - 1, size=(20, C.num_perm),
+                              dtype=np.int64, endpoint=True))
+    sig = np.stack(rows)
+    df = spark.createDataFrame([(i, r.tolist()) for i, r in enumerate(sig)],
+                               "i int, sig array<bigint>")
+    jvm = sorted(df.select("i", band_hash_array(C.lsh_bands, C.lsh_rows).alias("b"),
+                           packed_sig16(C.num_perm).alias("p")).collect())
+    assert [r["b"] for r in jvm] == band_hashes(sig, C.lsh_bands, C.lsh_rows).tolist()
+    assert [r["p"] for r in jvm] == packed_lanes16(sig).tolist()
+
+
+def test_minhash_table_equals_signature_plus_jvm_columns(spark, docs):
+    """One Python pass (minhash_table) yields the rows of
+    minhash_signatures with the JVM band/sig16 projections over it."""
+    from deduplicator_go_spark.operators.lsh import band_hash_array
+    from deduplicator_go_spark.operators.minhash import minhash_table, packed_sig16
+
+    src = docs.filter(F.abs(F.xxhash64("url")) % 4 == 0)
+    fused = minhash_table(src, C.shingle_size, C.num_perm, C.minhash_seed,
+                          C.lsh_bands, C.lsh_rows)
+    ref = minhash_signatures(src, C.shingle_size, C.num_perm, C.minhash_seed).withColumns({
+        "bands": band_hash_array(C.lsh_bands, C.lsh_rows),
+        "sig16": packed_sig16(C.num_perm),
+    })
+    cols = ["url", "sig", "bands", "sig16"]
+    assert fused.columns == cols
+    assert sorted(map(tuple, fused.select(*cols).collect())) == \
+        sorted(map(tuple, ref.select(*cols).collect()))

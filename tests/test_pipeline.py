@@ -544,3 +544,147 @@ def test_doc_bookmark_stale_after_commit_skip(spark, docs, tmp_path_factory):
     mh = cat.read(spark, "minhash_sigs")
     assert mh.count() == mh.select("url").distinct().count()
     assert mh.count() == cat.read(spark, "valid_docs").count()
+
+
+STAGE_ORDER = [
+    "valid_docs", "exact_sigs", "exact_edges", "minhash_sigs", "band_rows",
+    "candidates", "verified_pairs", "anchor_rows", "substr_pairs", "clusters",
+    "dup_report",
+]
+
+
+def _persisted(spark) -> dict[int, str]:
+    """{rdd id: storage level} of every RDD persisted in the context."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k): rdds.get(k).getStorageLevel().description() for k in rdds.keySet().toArray()}
+
+
+def _cache_rdd(spark, df) -> int:
+    """Id of the RDD holding ``df``'s ``.cache()`` blocks."""
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    return cached.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
+
+
+def test_report_keeps_graph_order(ran):
+    """Stages finish in any order across the concurrent chains; the
+    report lists them in the graph's canonical order."""
+    _, _, report = ran
+    assert [s.name for s in report.stages] == STAGE_ORDER
+
+
+def test_runner_starts_stages_after_their_inputs():
+    """The runner alone, on fake stages with random durations: no stage
+    starts before every table it waits on has committed, independent
+    chains do overlap, and results keep graph order."""
+    import random
+    import sys
+    import threading
+    import time
+
+    from deduplicator_go_spark.plans.pipeline import Stage, StageResult
+
+    # three chains off a root, joined twice — the pipeline's shape, wider
+    graph = [Stage("root", None)]
+    for chain in "abcdef":
+        graph += [Stage(f"{chain}{i}", None, deps=(f"{chain}{i - 1}" if i else "root",))
+                  for i in range(4)]
+    graph += [Stage("join1", None, deps=("a3", "b3"), reads=("c1",)),
+              Stage("join2", None, deps=("join1", "d3", "e3", "f3"))]
+    spans: dict[str, tuple[float, float]] = {}
+    live, peak = [0], [0]
+    lock = threading.Lock()
+    rng = random.Random(5)
+    delays = {s.name: rng.uniform(0.0, 0.02) for s in graph}
+
+    def fake_stage(s):
+        t0 = time.perf_counter()
+        with lock:
+            live[0] += 1
+            peak[0] = max(peak[0], live[0])
+        time.sleep(delays[s.name])
+        with lock:
+            live[0] -= 1
+        spans[s.name] = (t0, time.perf_counter())
+        return StageResult(s.name, False, 0, 0)
+
+    pipe = DedupPipeline.__new__(DedupPipeline)
+    pipe._run_stage = fake_stage
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        out = pipe._execute(graph)
+    finally:
+        sys.setswitchinterval(old)
+    assert [r.name for r in out] == [s.name for s in graph]
+    for s in graph:
+        for w in s.waits:
+            assert spans[w][1] <= spans[s.name][0], (w, s.name)
+    assert 1 < peak[0] <= 6
+
+
+def test_caller_cache_survives_run(spark, docs, tmp_path_factory):
+    """The pipeline releases only the pins its stages made: the caller's
+    caches (the ``docs`` fixture's own ``.cache()`` and a fresh one) keep
+    their RDDs and storage levels through run(), and no stage pin is
+    left behind."""
+    mine = docs.select("url", "text").filter(F.length("text") > 100).cache()
+    mine.count()
+    before = _persisted(spark)
+    held = {i: before.get(i) for i in (_cache_rdd(spark, docs), _cache_rdd(spark, mine))}
+    assert None not in held.values()  # an earlier run() may not drop them either
+
+    root = str(tmp_path_factory.mktemp("cache"))
+    DedupPipeline(spark, CheckpointCatalog(root), DedupConfig()).run(docs)
+    after = _persisted(spark)
+    assert {i: after.get(i) for i in held} == held
+    assert after.keys() <= before.keys()
+    mine.unpersist()
+
+
+def test_failure_in_one_chain(spark, docs, ran, tmp_path_factory, monkeypatch):
+    """anchor_rows fails while the exact and minhash chains run beside
+    it. run() lets the running stages finish, starts nothing new, and
+    only then re-raises the stage's own exception; a clean re-run on
+    the same catalog then matches a fresh run."""
+    import json
+    import os
+    import time
+
+    from deduplicator_go_spark.plans import pipeline as P
+
+    def boom(*_a, **_k):
+        raise RuntimeError("anchor stage failed")
+
+    root = str(tmp_path_factory.mktemp("fail"))
+    monkeypatch.setattr(P, "anchor_table", boom)
+    with pytest.raises(RuntimeError, match="anchor stage failed"):
+        DedupPipeline(spark, CheckpointCatalog(root), DedupConfig()).run(docs)
+    raised_at = time.time()
+    monkeypatch.undo()
+
+    def commits() -> dict[str, float]:
+        out = {}
+        for stage in STAGE_ORDER:
+            marker = os.path.join(root, f"_{stage}_COMMIT.json")
+            if os.path.exists(marker):
+                with open(marker) as f:
+                    out[stage] = json.load(f)["completed_at"]
+        return out
+
+    done = commits()
+    # the stages running beside the failed one finished and committed
+    # before run() raised ...
+    assert {"valid_docs", "exact_sigs", "minhash_sigs"} <= done.keys()
+    assert all(t <= raised_at for t in done.values())
+    # ... and nothing downstream of the failure or of a later start ran
+    assert not done.keys() & {"band_rows", "candidates", "verified_pairs", "anchor_rows",
+                              "substr_pairs", "clusters", "dup_report"}
+    time.sleep(1.0)
+    assert commits() == done
+
+    report = DedupPipeline(spark, CheckpointCatalog(root), DedupConfig()).run(docs)
+    by_name = {s.name: s for s in report.stages}
+    assert by_name["minhash_sigs"].skipped and not by_name["anchor_rows"].skipped
+    fresh, _, _ = ran
+    assert sorted(map(tuple, CheckpointCatalog(root).read(spark, "clusters").collect())) == \
+        sorted(map(tuple, fresh.read(spark, "clusters").collect()))
